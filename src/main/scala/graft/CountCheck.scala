@@ -12,8 +12,9 @@ import graft.streaming.{FeedConn, MergeSink}
   * Usage:
   *   runMain graft.CountCheck [--threshold N] <feed>=<storeRoot> ...
   *
-  * `feed` is a JSONL path or an `http(s)://host:port/db` URL (the
-  * nagios script's couch host). Exit codes are nagios-standard:
+  * `feed` is a JSONL path or an `http(s)://[user:password@]host:port/db`
+  * URL (the nagios script's couch host; credentials as in the
+  * reference's db-URL config). Exit codes are nagios-standard:
   * 0 = OK, 1 = WARNING (any mismatch), 2 = ERROR (difference >
   * threshold, default 10 like the script's `difference_threashold`).
   */
@@ -24,14 +25,8 @@ object CountCheck {
   }
 
   def check(spark: SparkSession, feed: String, storeRoot: String): Result = {
-    val conn =
-      if (feed.startsWith("http://") || feed.startsWith("https://")) {
-        val cut = feed.lastIndexOf('/')
-        FeedConn(None, Some(feed.substring(0, cut)),
-          Some(feed.substring(cut + 1)), None, None, 1000, 30000L)
-      } else FeedConn(Some(feed), None, None, None, None, 1000, 30000L)
     Result(feed,
-      conn.open().liveDocCount(),
+      FeedConn.of(feed).open().liveDocCount(),
       MergeSink.readState(spark, storeRoot).count())
   }
 

@@ -186,7 +186,7 @@ object JsonDoc {
       val feed = stagedReplayFeed(s, dir, typed, limitDocs, withText)
       val base = java.nio.file.Files.createTempDirectory(tag)
       val nLines = new graft.streaming.FileChangesFeed(feed)
-        .latestSeq() / 3 // upper bound is fine for the admission cap
+        .latestSeq().ord / 3 // upper bound is fine for the admission cap
       // admission cap scales with the corpus so the replay is always
       // ~3 admission-controlled micro-batches, at any SF (a fixed cap
       // would mean O(corpus) trigger overhead at bench scale). minCap
@@ -1478,7 +1478,7 @@ object JsonDoc {
     // Authorization header bounces 401 (an unauthenticated probe must
     // bounce first, proving enforcement is live), then the pipeline
     // ingests the whole corpus through the credentialed URL —
-    // buildReader lifts the userinfo into the source's basic-auth
+    // FeedConn.of lifts the userinfo into the source's basic-auth
     // options and strips it from the URL, so credentials never reach
     // query names or offset logs. Convergence on the fault-free oracle
     // is the assertion that every authenticated request carried the
@@ -2001,9 +2001,10 @@ object JsonDoc {
     // query time; at 100 TB the schemaless plane should be STORED as a
     // parquet variant column with writer shredding, so `variant_get`
     // reads a typed subcolumn via scan pushdown instead of decoding the
-    // whole binary. Measured (graft.VariantProbe, sf1): text-parse
-    // 2.47 s, stored unshredded 1.01 s, stored shredded + scan pushdown
-    // 0.38 s (pushdown off: 1.19 s — the pushdown IS the win). Same
+    // whole binary. Measured at sf1 (the 6.5x is recorded in
+    // BENCH_sf1.json note_r12): text-parse 2.47 s, stored unshredded
+    // 1.01 s, stored shredded + scan pushdown 0.38 s (pushdown off:
+    // 1.19 s — the pushdown IS the win). Same
     // semantics and oracle as j18, different (storage-level) plan.
     QueryDef(
       "j38_variant_shredded",

@@ -3,8 +3,6 @@ package graft.streaming
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -158,12 +156,12 @@ object BucketedMergeSink {
       else Files.createDirectories(dst) // bucket emptied by deletes
     }
     writeManifest(root, Manifest(batchId, buckets, newVersions))
-    deleteRecursive(Paths.get(staging))
+    MergeSink.deleteTree(Paths.get(staging))
     // retire the immediately-previous version of each touched bucket's
     // predecessor's predecessor (keep one crash-recovery version)
     touched.foreach { b =>
       val old = newVersions(b) - 2
-      if (old >= 0) deleteRecursive(Paths.get(bucketDir(root, b, old)))
+      if (old >= 0) MergeSink.deleteTree(Paths.get(bucketDir(root, b, old)))
     }
     touched.toSeq
   }
@@ -172,9 +170,4 @@ object BucketedMergeSink {
   def forBatch(root: String, buckets: Int = 16,
       excludeTypes: Set[String] = Set.empty): (DataFrame, Long) => Unit =
     (df, id) => { applyBatch(root, df, id, buckets, excludeTypes); () }
-
-  private def deleteRecursive(p: java.nio.file.Path): Unit =
-    if (Files.exists(p))
-      Files.walk(p).iterator().asScala.toSeq.reverse
-        .foreach(f => Files.deleteIfExists(f))
 }

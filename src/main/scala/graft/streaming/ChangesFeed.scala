@@ -7,68 +7,51 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 
 import graft.cdc.ChangeEvent
 
-/** A CouchDB `_changes` feed client abstraction.
+/** A CouchDB `_changes` feed client abstraction, keyed by one cursor
+  * type, [[SeqTok]]: the ordinal orders and ranges; the token resumes.
   *
-  * The reference follows the feed over a long-lived HTTP socket
-  * (reference lib/index.js:50-53, 243-290: `follow.Feed({db,
-  * include_docs:true})`, resume from `since`, 30 s inactivity timeout).
-  * In the Spark source the same contract becomes a pull API keyed by the
-  * monotonic `seq`: "give me changes with seq in (since, until]" — which
-  * is exactly what a micro-batch needs and what CouchDB's
-  * `_changes?since=N&limit=M` endpoint serves.
+  * The reference follows the feed over a long-lived HTTP socket with a
+  * single `since` cursor (reference lib/index.js:50-53, 243-290:
+  * `follow.Feed({db, include_docs:true})`, 30 s inactivity timeout).
+  * In the Spark source the same contract becomes a replayable offset
+  * range, "changes with seq in (since, until]" — exactly what a
+  * micro-batch needs and what CouchDB's `_changes?since=X&limit=M`
+  * endpoint serves. A CouchDB 1.x or file feed has ordinals only; a
+  * CouchDB 2/3 feed also carries the opaque `"N-blob"` token the server
+  * requires as `since=`, and every answer here keeps it.
+  *
+  * The trait is the driver's view: bounds, admission control and the
+  * ops count. Change payloads are read by partition readers —
+  * [[ChangesFeed.readSlice]] for files, [[HttpChangesFeed.changes]] over
+  * HTTP — so they never pass through the driver.
   *
   * Implementations:
   *  - [[FileChangesFeed]] — JSONL file(s) on disk; deterministic test /
-  *    replay feed (one line per change, the wire shape FIXTURES.md §1).
-  *    Splittable by byte range, so a large feed file parses in parallel
-  *    across partition readers instead of once per reader.
+  *    replay feed (one line per change, the wire shape FIXTURES.md §1),
+  *    splittable by byte range so a large file parses in parallel.
   *  - [[HttpChangesFeed]] — the real client: `GET
-  *    /db/_changes?include_docs=true&since=N&limit=M` with basic auth
-  *    and an inactivity timeout (reference lib/index.js:243-290),
-  *    exercised against a local stub server (zero-egress).
+  *    /db/_changes?include_docs=true&since=X&limit=M` with basic auth
+  *    and an inactivity timeout, exercised against a local stub server
+  *    (zero-egress).
   */
 trait ChangesFeed extends Serializable {
-  /** Highest seq currently available (the feed's `last_seq`). */
-  def latestSeq(): Long
+  /** Highest seq currently available (the feed's `update_seq`). */
+  def latestSeq(): SeqTok
 
-  /** Changes with `seq` in (since, until], ordered by seq. */
-  def changes(since: Long, until: Long): Iterator[ChangeEvent]
-
-  // ---- Opaque-seq (CouchDB 2/3) variants. A modern CouchDB emits seqs
-  // as `"N-base64blob"` strings: the numeric prefix is the monotone
-  // ordinal the range logic keys on, but RESUME requires the full token
-  // (`since=<prefix>` is not a valid 2/3 cursor). Numeric feeds (1.x,
-  // file replays) inherit these defaults — ordinals only, no tokens.
-
-  /** Highest seq with its resume token (None on numeric feeds). */
-  def latestSeqTok(): SeqTok = SeqTok(latestSeq(), None)
-
-  /** Token-aware admission control: the nth change after `since`,
-    * ordinal-capped at `capOrd`, with its full resume token. */
-  def nthSeqTokAfter(since: SeqTok, n: Long, capOrd: Long): SeqTok =
-    SeqTok(nthSeqAfter(since.ord, n, capOrd), None)
-
-  /** Changes strictly after `since` up to and including `until` —
-    * token-exact when tokens are present (the server resumes after
-    * since's exact token; the iterator stops at until's exact token),
-    * ordinal-range otherwise. */
-  def changesTok(since: SeqTok, until: SeqTok): Iterator[ChangeEvent] =
-    changes(since.ord, until.ord)
+  /** Admission control (T2): the seq of the `n`th change after `since`,
+    * with an ordinal not exceeding `capOrd` — i.e. the end offset that
+    * admits at most `n` changes into the batch. Returns the highest
+    * available seq in (since, capOrd] when fewer than `n` exist, and
+    * `since` when none do. Deliberately NOT "all seqs after X": the
+    * driver must never materialize the feed tail (O(feed) heap per
+    * trigger at a 100 M-change feed). */
+  def nthSeqAfter(since: SeqTok, n: Long, capOrd: Long): SeqTok
 
   /** Current live (non-deleted) document count — CouchDB's `doc_count`.
     * Feeds that can't answer cheaply may compute it; the ops
     * count-consistency check ([[graft.CountCheck]]) is the only
     * caller. */
   def liveDocCount(): Long
-
-  /** Admission control (T2): the seq of the `n`th change after `since`,
-    * not exceeding `cap` — i.e. the end offset that admits at most `n`
-    * changes into the batch. Returns the highest available seq in
-    * (since, cap] when fewer than `n` exist, and `since` when none do.
-    * Deliberately NOT "all seqs after X": the driver must never
-    * materialize the feed tail (O(feed) heap per trigger at a
-    * 100 M-change feed). */
-  def nthSeqAfter(since: Long, n: Long, cap: Long): Long
 }
 
 /** A CouchDB sequence cursor: the monotone numeric ordinal plus — for
@@ -255,10 +238,10 @@ final class FileChangesFeed(val path: String) extends ChangesFeed {
     finally src.close()
   }
 
-  override def latestSeq(): Long = {
+  override def latestSeq(): SeqTok = {
     val fs = files()
-    if (fs.isEmpty) 0L
-    else fs.map(f => summaryOf(f).maxSeq).max
+    if (fs.isEmpty) SeqTok.Zero
+    else SeqTok(fs.map(f => summaryOf(f).maxSeq).max, None)
   }
 
   /** Replay latest-per-id over the files (streaming fold, O(ids) map —
@@ -276,19 +259,13 @@ final class FileChangesFeed(val path: String) extends ChangesFeed {
     last.valuesIterator.count(!_._2)
   }
 
-  override def changes(since: Long, until: Long): Iterator[ChangeEvent] =
-    files().iterator.flatMap(f =>
-      ChangesFeed.readSlice(f.getPath, 0L, Long.MaxValue))
-      .filter(e => e.seq > since && e.seq <= until)
-      .toVector.sortBy(_.seq).iterator
-
   /** Files are assumed seq-disjoint (rotated feed logs are; CouchDB
     * seqs are assigned monotonically). Overlapping files still give a
     * correct cap — counts stay exact per file — but the admitted batch
     * may land slightly off `n` inside the overlap window, which is fine:
     * ReadMaxRows is best-effort admission control, not a hard contract. */
-  override def nthSeqAfter(since: Long, n: Long, cap: Long): Long = {
-    if (n <= 0) return since
+  override def nthSeqAfter(sinceTok: SeqTok, n: Long, cap: Long): SeqTok = {
+    val since = sinceTok.ord
     val fs = files()
       .map(f => f -> summaryOf(f))
       .filter { case (_, s) => s.count > 0 && s.maxSeq > since && s.minSeq <= cap }
@@ -316,7 +293,7 @@ final class FileChangesFeed(val path: String) extends ChangesFeed {
         }
       }
     }
-    last
+    if (last == since) sinceTok else SeqTok(last, None)
   }
 
   /** Byte-range slices across all files, ~`target` total — the unit of

@@ -44,11 +44,12 @@ import graft.cdc.ChangeEvent
   * [[SupportsAdmissionControl]].
   *
   * SCALE: one feed is inherently a single ordered stream (CouchDB
-  * assigns seqs serially), so `planInputPartitions` splits the seq RANGE
-  * into `numPartitions` slices — parse/merge parallelism downstream —
-  * while the per-key max(seq) dedup in the sink makes intra-batch order
-  * irrelevant (T1). Many feeds = many independent streams (§ control
-  * plane, [[Supervisor]]).
+  * assigns seqs serially), read through one [[SeqTok]] cursor. Over
+  * HTTP, `planInputPartitions` either splits a tokenless seq RANGE into
+  * up to `numPartitions` sub-ranges or, on an opaque-seq feed, makes
+  * one token-exact pull; the per-key max(seq) dedup in the sink makes
+  * intra-batch order irrelevant (T1). Many feeds = many independent
+  * streams (§ control plane, [[Supervisor]]).
   */
 class ChangesTableProvider extends TableProvider with DataSourceRegister {
   override def shortName(): String = "couch-changes"
@@ -121,13 +122,23 @@ final case class FeedConn(
     password: Option[String],
     pageSize: Int,
     timeoutMs: Long) {
-  def open(): ChangesFeed = (path, url, db) match {
-    case (Some(p), _, _) => new FileChangesFeed(p)
-    case (None, Some(u), Some(d)) =>
+  def open(): ChangesFeed = path match {
+    case Some(p) => new FileChangesFeed(p)
+    case None => http()
+  }
+
+  def http(): HttpChangesFeed = (url, db) match {
+    case (Some(u), Some(d)) =>
       new HttpChangesFeed(u, d, user, password, pageSize, timeoutMs)
     case _ => throw new FeedGoneException(
       "couch-changes needs either option path=<jsonl> or url=+db=")
   }
+
+  /** The source options that reopen these coordinates (paging and
+    * timeout left at their defaults). */
+  def options: Map[String, String] =
+    Seq("path" -> path, "url" -> url, "db" -> db, "user" -> user,
+      "password" -> password).collect { case (k, Some(v)) => k -> v }.toMap
 }
 
 object FeedConn {
@@ -139,6 +150,36 @@ object FeedConn {
     password = opt("password"),
     pageSize = opt("pageSize").map(_.toInt).getOrElse(1000),
     timeoutMs = opt("timeoutMs").map(_.toLong).getOrElse(30000L))
+
+  /** Coordinates of a feed string: a JSONL path, or an
+    * `http(s)://[user:password@]host:port/db` URL — the reference's
+    * db-URL config (lib/index.js:50). The last path segment is the
+    * database. The userinfo is lifted into basic-auth credentials and
+    * stripped from the URL, so it never appears in query names,
+    * offsets, or logs.
+    *
+    * ENCODING CONTRACT: a credentialed URL must be RFC-3986
+    * percent-encoded (special characters in the password like `@`/`/`
+    * as `%40`/`%2F`); the userinfo is percent-DECODED exactly once
+    * here, so what reaches the server is the raw secret. A feed URL
+    * that does not parse as a URI at all falls back to plain substring
+    * splitting (tolerating unencoded spaces/pipes in the query) — but
+    * then cannot carry credentials. */
+  def of(feed: String): FeedConn =
+    if (!feed.startsWith("http://") && !feed.startsWith("https://"))
+      fromOptions(Map("path" -> feed).get)
+    else {
+      val uri = scala.util.Try(java.net.URI.create(feed)).toOption
+        .filter(_.getUserInfo != null)
+      val clean = uri.fold(feed)(u => new java.net.URI(u.getScheme, null,
+        u.getHost, u.getPort, u.getPath, u.getQuery, null).toString)
+      val creds = uri.map(_.getUserInfo.split(":", 2)).fold(
+        Map.empty[String, String])(ui =>
+        Map("user" -> ui(0), "password" -> ui.lift(1).getOrElse("")))
+      val cut = clean.lastIndexOf('/')
+      fromOptions((creds ++ Map("url" -> clean.substring(0, cut),
+        "db" -> clean.substring(cut + 1))).get)
+    }
 }
 
 final class ChangesMicroBatchStream(
@@ -155,7 +196,7 @@ final class ChangesMicroBatchStream(
   @volatile private var availableNowTarget: Option[SeqTok] = None
 
   override def prepareForTriggerAvailableNow(): Unit =
-    availableNowTarget = Some(feed.latestSeqTok())
+    availableNowTarget = Some(feed.latestSeq())
 
   override def initialOffset(): Offset = ChangesOffset.of(startSince)
 
@@ -172,9 +213,9 @@ final class ChangesMicroBatchStream(
     val capOrd = availableNowTarget.map(_.ord).getOrElse(Long.MaxValue)
     limit match {
       case mr: ReadMaxRows =>
-        ChangesOffset.of(feed.nthSeqTokAfter(since, mr.maxRows(), capOrd))
+        ChangesOffset.of(feed.nthSeqAfter(since, mr.maxRows(), capOrd))
       case _ =>
-        val latest = feed.latestSeqTok()
+        val latest = feed.latestSeq()
         val end = availableNowTarget match {
           case Some(t) if t.ord < latest.ord => t
           case _ => latest
@@ -189,16 +230,21 @@ final class ChangesMicroBatchStream(
       "latestOffset(Offset, ReadLimit) is used (SupportsAdmissionControl)")
 
   override def reportLatestOffset(): Offset =
-    ChangesOffset.of(feed.latestSeqTok())
+    ChangesOffset.of(feed.latestSeq())
 
   /** File feed: one partition per byte-range slice — every reader
     * parses ONLY its slice (splittable-text convention) and filters to
     * the (start, end] seq range, so parse parallelism scales with file
     * size instead of each reader re-parsing the whole feed.
     *
-    * HTTP feed: contiguous seq sub-ranges — each reader pages its own
-    * range from the server with include_docs=true, so document
-    * payloads flow server→executor, never through the driver. */
+    * HTTP feed: each reader pages its own (since, until] range from the
+    * server with include_docs=true, so document payloads flow
+    * server→executor, never through the driver. Tokenless bounds split
+    * into contiguous sub-ranges of >=1000 seqs each (a small admitted
+    * range is not fanned across every reader). Opaque-seq (CouchDB 2/3)
+    * bounds make one token-exact pull: an executor cannot synthesize a
+    * since= token for an interior ordinal, so parse/merge parallelism
+    * comes downstream of the source, as for a single hot file slice. */
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val loOff = start.asInstanceOf[ChangesOffset]
     val hiOff = end.asInstanceOf[ChangesOffset]
@@ -210,25 +256,18 @@ final class ChangesMicroBatchStream(
         f.slices(numPartitions).map { case (file, sb, eb) =>
           ChangesInputPartition(file, sb, eb, lo, hi): InputPartition
         }.toArray
-      case _: HttpChangesFeed
-          if loOff.token.isDefined || hiOff.token.isDefined =>
-        // opaque-seq (CouchDB 2/3) feed: an executor cannot synthesize
-        // a since= token for an arbitrary interior ordinal, so the
-        // batch is one token-exact pull (resume after lo's token, stop
-        // at hi's). Parse/merge parallelism comes downstream of the
-        // source, exactly as for a single hot file slice.
-        Array(HttpChangesTokenPartition(conn, loOff.tok, hiOff.tok))
       case _: HttpChangesFeed =>
-        // don't fan a small admitted range across every reader: each
-        // partition is a paged HTTP pull, so target >=1000 seqs per
-        // reader before using full parallelism
-        val n = math.max(1L, math.min(numPartitions.toLong,
-          (hi - lo + 999) / 1000)).toInt
-        (0 until n).map { i =>
-          val from = lo + (hi - lo) * i / n
-          val to = lo + (hi - lo) * (i + 1) / n
-          HttpChangesInputPartition(conn, from, to): InputPartition
-        }.toArray
+        val n =
+          if (loOff.token.isDefined || hiOff.token.isDefined) 1
+          else math.max(1L, math.min(numPartitions.toLong,
+            (hi - lo + 999) / 1000)).toInt
+        def cut(i: Int): SeqTok =
+          if (i == 0) loOff.tok
+          else if (i == n) hiOff.tok
+          else SeqTok(lo + (hi - lo) * i / n, None)
+        (0 until n).map(i =>
+          HttpChangesInputPartition(conn, cut(i), cut(i + 1)): InputPartition)
+          .toArray
     }
   }
 
@@ -243,13 +282,9 @@ final case class ChangesInputPartition(
     file: String, startByte: Long, endByte: Long,
     fromSeq: Long, toSeq: Long) extends InputPartition
 
-/** HTTP reader partition: a contiguous (fromSeq, toSeq] sub-range the
-  * executor pulls itself (connection coordinates, never data). */
+/** HTTP reader partition: a (since, until] range the executor pulls
+  * itself (connection coordinates, never data). */
 final case class HttpChangesInputPartition(
-    conn: FeedConn, fromSeq: Long, toSeq: Long) extends InputPartition
-
-/** Opaque-seq HTTP partition: token-exact (since, until] pull. */
-final case class HttpChangesTokenPartition(
     conn: FeedConn, since: SeqTok, until: SeqTok) extends InputPartition
 
 final class ChangesReaderFactory extends PartitionReaderFactory {
@@ -260,11 +295,7 @@ final class ChangesReaderFactory extends PartitionReaderFactory {
           ChangesFeed.readSlice(p.file, p.startByte, p.endByte)
             .filter(e => e.seq > p.fromSeq && e.seq <= p.toSeq))
       case p: HttpChangesInputPartition =>
-        new ChangesPartitionReader(
-          p.conn.open().changes(p.fromSeq, p.toSeq))
-      case p: HttpChangesTokenPartition =>
-        new ChangesPartitionReader(
-          p.conn.open().changesTok(p.since, p.until))
+        new ChangesPartitionReader(p.conn.http().changes(p.since, p.until))
     }
 }
 

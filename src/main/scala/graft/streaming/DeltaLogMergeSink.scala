@@ -3,8 +3,6 @@ package graft.streaming
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -151,18 +149,13 @@ object DeltaLogMergeSink {
     readState(spark, root).write.mode("overwrite")
       .parquet(s"$root/base/v=$v")
     writeLog(root, Log(log.batchId, v, Vector.empty))
-    log.deltas.foreach(d => deleteRecursive(Paths.get(s"$root/delta/d=$d")))
+    log.deltas.foreach(d => MergeSink.deleteTree(Paths.get(s"$root/delta/d=$d")))
     if (log.baseVersion >= 0)
-      deleteRecursive(Paths.get(s"$root/base/v=${log.baseVersion}"))
+      MergeSink.deleteTree(Paths.get(s"$root/base/v=${log.baseVersion}"))
   }
 
   /** foreachBatch hook. */
   def forBatch(root: String, compactEvery: Int = 16,
       excludeTypes: Set[String] = Set.empty): (DataFrame, Long) => Unit =
     (df, id) => { applyBatch(root, df, id, compactEvery, excludeTypes); () }
-
-  private def deleteRecursive(p: java.nio.file.Path): Unit =
-    if (Files.exists(p))
-      Files.walk(p).iterator().asScala.toSeq.reverse
-        .foreach(f => Files.deleteIfExists(f))
 }

@@ -6,7 +6,7 @@ import java.nio.charset.StandardCharsets
 import java.time.Duration
 import java.util.Base64
 
-import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 
 import graft.cdc.ChangeEvent
 
@@ -30,10 +30,10 @@ import graft.cdc.ChangeEvent
   * for (lib/index.js:211-223).
   *
   * SCALE: the driver only ever asks for bounds ([[latestSeq]]) and the
-  * admission-control cap ([[nthSeqAfter]], one page of bare seqs — no
-  * docs); executors pull their own seq sub-ranges with
-  * `include_docs=true` ([[changes]]), so document payloads never pass
-  * through the driver. State is O(1) per feed.
+  * admission-control cap ([[nthSeqAfter]], pages of bare seqs — no
+  * docs); executors pull their own seq ranges with `include_docs=true`
+  * ([[changes]]), so document payloads never pass through the driver.
+  * State is O(1) per feed.
   *
   * Zero-egress note: exercised against a local
   * `com.sun.net.httpserver` stub (HttpChangesFeedSpec) — the wire
@@ -57,63 +57,83 @@ final class HttpChangesFeed(
   @transient private lazy val client: HttpClient =
     HttpChangesFeed.clientFor(timeoutMs)
 
-  /** Basic auth per reference lib/index.js:50 (credentials in db URL). */
-  private def authHeader: Option[String] = user.map { u =>
-    val raw = s"$u:${password.getOrElse("")}"
-    "Basic " + Base64.getEncoder.encodeToString(
-      raw.getBytes(StandardCharsets.UTF_8))
+  /** Every request: the db-relative `pathAndQuery`, a per-request
+    * timeout, and basic auth per reference lib/index.js:50 (credentials
+    * in the db URL). */
+  private def request(pathAndQuery: String, reqTimeoutMs: Long): HttpRequest = {
+    val b = HttpRequest.newBuilder(URI.create(s"$baseUrl/$db$pathAndQuery"))
+      .timeout(Duration.ofMillis(reqTimeoutMs))
+      .GET()
+    user.foreach { u =>
+      val raw = s"$u:${password.getOrElse("")}"
+      b.header("Authorization", "Basic " + Base64.getEncoder.encodeToString(
+        raw.getBytes(StandardCharsets.UTF_8)))
+    }
+    b.build()
   }
+
+  /** Every response: 404 is the fatal [[FeedGoneException]]; any other
+    * status >= 400 is the transient IOException. */
+  private def classify(code: Int, pathAndQuery: String): Unit =
+    if (code == 404)
+      throw new FeedGoneException(s"$baseUrl/$db not found (no_db_file)")
+    else if (code >= 400)
+      throw new java.io.IOException(s"GET /$db$pathAndQuery -> HTTP $code")
 
   /** GET with bounded in-client retry for the throttle classes a real
     * CouchDB (or its fronting proxy) emits: 429/503 honor `Retry-After`
     * (seconds, capped at 2 s so a hostile header can't stall a task)
     * up to `maxRetries` attempts, then surface as IOException — the
-    * transient class the [[Supervisor]] restarts with backoff. 404
-    * stays fatal ([[FeedGoneException]]); other 4xx/5xx throw
-    * immediately (retrying a 400 can never help). */
-  private def get(pathAndQuery: String): String =
-    get(pathAndQuery, timeoutMs)
-
-  private def get(pathAndQuery: String, reqTimeoutMs: Long): String = {
+    * transient class the [[Supervisor]] restarts with backoff. Other
+    * statuses go through [[classify]] at once (retrying a 400 can
+    * never help). */
+  private def get(pathAndQuery: String, reqTimeoutMs: Long = timeoutMs): String = {
     var attempt = 0
     var result: String = null
     while (result == null) {
-      val b = HttpRequest.newBuilder(URI.create(s"$baseUrl$pathAndQuery"))
-        .timeout(Duration.ofMillis(reqTimeoutMs))
-        .GET()
-      authHeader.foreach(b.header("Authorization", _))
-      val resp = client.send(b.build(), HttpResponse.BodyHandlers.ofString())
+      val resp = client.send(request(pathAndQuery, reqTimeoutMs),
+        HttpResponse.BodyHandlers.ofString())
       val code = resp.statusCode()
-      if (code == 404)
-        throw new FeedGoneException(s"$baseUrl/$db not found (no_db_file)")
-      else if (code == 429 || code == 503) {
+      if (code == 429 || code == 503) {
         attempt += 1
         if (attempt > maxRetries)
           throw new java.io.IOException(
-            s"GET $pathAndQuery -> HTTP $code after $maxRetries retries")
+            s"GET /$db$pathAndQuery -> HTTP $code after $maxRetries retries")
         val ra = resp.headers().firstValue("Retry-After")
         val retryAfterMs =
           (if (ra.isPresent) ra.get.toLongOption.getOrElse(0L) else 0L) * 1000L
         Thread.sleep(math.min(math.max(retryAfterMs, 50L * attempt), 2000L))
-      } else if (code >= 400)
-        throw new java.io.IOException(s"GET $pathAndQuery -> HTTP $code")
-      else result = resp.body()
+      } else {
+        classify(code, pathAndQuery)
+        result = resp.body()
+      }
     }
     result
   }
 
+  /** The `results` array of one `_changes` page (empty when absent). */
+  private def page(query: String): JsonNode = {
+    val results = mapper.readTree(get(s"/_changes?$query")).path("results")
+    if (results.isArray) results else mapper.createArrayNode()
+  }
+
+  /** A page that held rows but not one orderable seq is not the end of
+    * the feed — treating it so would silently drop the rest of the
+    * range (the batch offset still advances past it). Fail loudly as
+    * the transient class so the Supervisor's watchdog/backoff sees it. */
+  private def unorderable(cursor: SeqTok, rows: Int) = new java.io.IOException(
+    s"/$db/_changes page after since=${cursor.sinceParam}: " +
+      s"all $rows seqs unparseable")
+
   /** `update_seq` from the db info document — numeric on 1.x, an
     * opaque `"N-blob"` string on 2/3 (ordinal = prefix). */
-  override def latestSeqTok(): SeqTok =
-    SeqTok.ofNode(mapper.readTree(get(s"/$db")).path("update_seq"))
-
-  /** Ordinal view of [[latestSeqTok]]. */
-  override def latestSeq(): Long = latestSeqTok().ord
+  override def latestSeq(): SeqTok =
+    SeqTok.ofNode(mapper.readTree(get("")).path("update_seq"))
 
   /** Long-poll wait: `feed=longpoll` holds the request until at least
     * one change lands after `since` (or the server-side `timeout`
     * elapses), then answers the normal results JSON — the low-latency
-    * alternative to polling [[latestSeqTok]] between triggers, and the
+    * alternative to polling [[latestSeq]] between triggers, and the
     * closest micro-batch analog of the reference's continuous socket
     * (lib/index.js:243-290). Heartbeat newlines the server emits while
     * holding the connection arrive as leading whitespace on the body,
@@ -121,7 +141,7 @@ final class HttpChangesFeed(
     * new high-water (== `since` on timeout with no changes). */
   def longPoll(since: SeqTok, waitMs: Long): SeqTok = {
     val body = get(
-      s"/$db/_changes?feed=longpoll&since=${since.sinceParam}" +
+      s"/_changes?feed=longpoll&since=${since.sinceParam}" +
         s"&timeout=$waitMs&heartbeat=5000",
       reqTimeoutMs = waitMs + timeoutMs)
     val n = mapper.readTree(body)
@@ -149,19 +169,11 @@ final class HttpChangesFeed(
   def changesContinuous(
       since: SeqTok, serverTimeoutMs: Long = 500L,
       includeDocs: Boolean = true): (Vector[ChangeEvent], SeqTok) = {
-    val q = s"/$db/_changes?feed=continuous&include_docs=$includeDocs" +
+    val q = s"/_changes?feed=continuous&include_docs=$includeDocs" +
       s"&since=${since.sinceParam}&timeout=$serverTimeoutMs$styleParam"
-    val b = HttpRequest.newBuilder(URI.create(s"$baseUrl$q"))
-      .timeout(Duration.ofMillis(serverTimeoutMs + timeoutMs))
-      .GET()
-    authHeader.foreach(b.header("Authorization", _))
-    val resp = client.send(b.build(),
+    val resp = client.send(request(q, serverTimeoutMs + timeoutMs),
       HttpResponse.BodyHandlers.ofInputStream())
-    if (resp.statusCode() == 404)
-      throw new FeedGoneException(s"$baseUrl/$db not found (no_db_file)")
-    if (resp.statusCode() >= 400)
-      throw new java.io.IOException(
-        s"GET /$db/_changes feed=continuous -> HTTP ${resp.statusCode()}")
+    classify(resp.statusCode(), q)
     val out = Vector.newBuilder[ChangeEvent]
     var last = since
     val body = resp.body()
@@ -217,135 +229,83 @@ final class HttpChangesFeed(
   /** `doc_count` from the db info document — exactly what the
     * reference's nagios check reads (nagios-check_couch_postgres_count:
     * 25). */
-  override def liveDocCount(): Long = {
-    val n = mapper.readTree(get(s"/$db"))
-    n.path("doc_count").asLong(0L)
-  }
+  override def liveDocCount(): Long =
+    mapper.readTree(get("")).path("doc_count").asLong(0L)
 
-  /** Page through `_changes` with `include_docs=true` until `until` is
-    * passed. Each page resumes from the previous page's last seq, so a
-    * slow consumer never re-downloads — the stateless analog of the
-    * reference's socket backpressure. */
-  override def changes(since: Long, until: Long): Iterator[ChangeEvent] =
+  /** Changes strictly after `since` up to and including `until`, paged
+    * with `include_docs=true`. Each page resumes from the previous
+    * page's last row — by full token on a 2/3 feed, by ordinal on a 1.x
+    * one — so a slow consumer never re-downloads (the stateless analog
+    * of the reference's socket backpressure). Rows outside (since,
+    * until] by ordinal are dropped; the iterator stops at the first
+    * ordinal past `until`, or once it has emitted the change whose
+    * token equals `until`'s. A row with an unorderable seq is skipped
+    * like [[ChangesFeed.parseNode]] skips it, a page with no orderable
+    * seq fails loudly, and a cursor the server does not advance ends
+    * the read instead of looping. */
+  def changes(since: SeqTok, until: SeqTok): Iterator[ChangeEvent] =
     new Iterator[ChangeEvent] {
       private var buf: Iterator[ChangeEvent] = Iterator.empty
       private var cursor = since
       private var exhausted = false
 
-      private def fill(): Unit = {
+      private def fill(): Unit =
         while (!buf.hasNext && !exhausted) {
-          val body = get(
-            s"/$db/_changes?include_docs=true&since=$cursor&limit=$pageSize$styleParam")
-          val n = mapper.readTree(body)
-          val results = n.path("results")
-          if (!results.isArray || results.size() == 0) exhausted = true
-          else {
-            val events = (0 until results.size()).iterator
-              .flatMap(i => ChangesFeed.parseNode(mapper, results.get(i)))
-              .toVector
-            if (events.isEmpty) exhausted = true
-            else {
-              val maxSeq = events.map(_.seq).max
-              // a well-behaved server only returns seq > since; a stuck
-              // cursor would otherwise loop forever
-              if (maxSeq <= cursor) exhausted = true
-              else cursor = maxSeq
-              val inRange = events.filter(e => e.seq > since && e.seq <= until)
-              if (events.exists(_.seq > until)) exhausted = true
-              buf = inRange.sortBy(_.seq).iterator
-            }
-          }
-        }
-      }
-
-      override def hasNext: Boolean = { fill(); buf.hasNext }
-      override def next(): ChangeEvent = { fill(); buf.next() }
-    }
-
-  /** Token-exact paging for opaque-seq (CouchDB 2/3) feeds: the server
-    * resumes AFTER `since`'s exact token, and the iterator stops once
-    * it has emitted the change whose token equals `until`'s (with an
-    * ordinal safety stop should that token never appear — e.g. the end
-    * bound was an `update_seq` rather than a change's seq). Falls back
-    * to the numeric ordinal path when neither bound carries a token. */
-  override def changesTok(since: SeqTok, until: SeqTok): Iterator[ChangeEvent] = {
-    if (since.token.isEmpty && until.token.isEmpty)
-      return changes(since.ord, until.ord)
-    new Iterator[ChangeEvent] {
-      private var buf: Iterator[ChangeEvent] = Iterator.empty
-      private var cursor = since
-      private var exhausted = false
-
-      private def fill(): Unit = {
-        while (!buf.hasNext && !exhausted) {
-          val body = get(s"/$db/_changes?include_docs=true" +
+          val results = page(s"include_docs=true" +
             s"&since=${cursor.sinceParam}&limit=$pageSize$styleParam")
-          val n = mapper.readTree(body)
-          val results = n.path("results")
-          if (!results.isArray || results.size() == 0) exhausted = true
+          if (results.size() == 0) exhausted = true
           else {
             val out = Vector.newBuilder[ChangeEvent]
-            var i = 0
             var last = cursor
             var sawTok = false
+            var i = 0
             while (i < results.size() && !exhausted) {
               val node = results.get(i)
-              // unparseable seq: skip the row without advancing the
-              // cursor, exactly like parseNode skips the change
               SeqTok.ofNodeOpt(node.path("seq")).foreach { tok =>
                 sawTok = true
                 if (tok.ord > until.ord) exhausted = true
                 else {
-                  ChangesFeed.parseNode(mapper, node).foreach(out += _)
+                  if (tok.ord > since.ord)
+                    ChangesFeed.parseNode(mapper, node).foreach(out += _)
                   last = tok
-                  if (until.token.contains(tok.sinceParam)) exhausted = true
+                  if (until.token.isDefined && tok.token == until.token)
+                    exhausted = true
                 }
               }
               i += 1
             }
-            // an entire page of unorderable seqs is not "exhausted" —
-            // treating it so would wedge the feed silently (the cursor
-            // never advances, every trigger re-reads the same page).
-            // Fail loudly as the transient class so the Supervisor's
-            // watchdog/backoff sees it, like the pre-skip behavior.
-            if (!sawTok)
-              throw new java.io.IOException(
-                s"/$db/_changes page after since=${cursor.sinceParam}: " +
-                  s"all ${results.size()} seqs unparseable")
-            // a stuck cursor (server ignored since=) must not loop
-            if (!exhausted && last.sinceParam == cursor.sinceParam)
-              exhausted = true
+            if (!sawTok) throw unorderable(cursor, results.size())
+            if (last == cursor) exhausted = true // server ignored since=
             cursor = last
             buf = out.result().iterator
           }
         }
-      }
 
       override def hasNext: Boolean = { fill(); buf.hasNext }
       override def next(): ChangeEvent = { fill(); buf.next() }
     }
-  }
 
-  /** Token-aware admission control: bare pages (no docs), cursoring by
-    * full token so a 2/3 server accepts every resume. */
-  override def nthSeqTokAfter(since: SeqTok, n: Long, capOrd: Long): SeqTok = {
-    if (n <= 0) return since
+  /** Ordinal view of [[changes]] for tokenless (1.x) bounds. */
+  def changes(since: Long, until: Long): Iterator[ChangeEvent] =
+    changes(SeqTok(since, None), SeqTok(until, None))
+
+  /** Admission control from bare pages (no docs), cursoring by full
+    * token so a 2/3 server accepts every resume. */
+  override def nthSeqAfter(since: SeqTok, n: Long, capOrd: Long): SeqTok = {
     var last = since
     var remaining = n
     var cursor = since
     var done = false
     while (!done && remaining > 0) {
-      val page = math.min(remaining, pageSize.toLong)
-      val body = get(s"/$db/_changes?since=${cursor.sinceParam}&limit=$page")
-      val node = mapper.readTree(body)
-      val results = node.path("results")
-      if (!results.isArray || results.size() == 0) done = true
+      val limit = math.min(remaining, pageSize.toLong)
+      val results = page(s"since=${cursor.sinceParam}&limit=$limit")
+      if (results.size() == 0) done = true
       else {
         val prevCursor = cursor
         var i = 0
         var sawTok = false
         while (i < results.size() && remaining > 0) {
-          // unparseable seq: skip the row (see changesTok)
+          // unparseable seq: skip the row (see changes)
           SeqTok.ofNodeOpt(results.get(i).path("seq")).foreach { tok =>
             sawTok = true
             if (tok.ord > cursor.ord ||
@@ -357,43 +317,8 @@ final class HttpChangesFeed(
           }
           i += 1
         }
-        // full page of unorderable seqs: fail loudly (see changesTok)
-        if (!sawTok && remaining > 0)
-          throw new java.io.IOException(
-            s"/$db/_changes page after since=${prevCursor.sinceParam}: " +
-              s"all ${results.size()} seqs unparseable")
-        if (results.size() < page ||
-            cursor.sinceParam == prevCursor.sinceParam) done = true
-      }
-    }
-    last
-  }
-
-  /** One bare page (no docs) answers admission control exactly:
-    * `_changes?since=X&limit=n` returns the next n seqs in feed order. */
-  override def nthSeqAfter(since: Long, n: Long, cap: Long): Long = {
-    if (n <= 0) return since
-    var last = since
-    var remaining = n
-    var cursor = since
-    var done = false
-    while (!done && remaining > 0) {
-      val page = math.min(remaining, pageSize.toLong)
-      val body = get(s"/$db/_changes?since=$cursor&limit=$page")
-      val node = mapper.readTree(body)
-      val results = node.path("results")
-      if (!results.isArray || results.size() == 0) done = true
-      else {
-        val prevCursor = cursor
-        var i = 0
-        while (i < results.size() && remaining > 0) {
-          val seq = results.get(i).path("seq").asLong(Long.MinValue)
-          if (seq > cursor) cursor = seq
-          if (seq > since && seq <= cap) { last = seq; remaining -= 1 }
-          else if (seq > cap) { remaining = 0 }
-          i += 1
-        }
-        if (results.size() < page || cursor == prevCursor) done = true
+        if (!sawTok && remaining > 0) throw unorderable(prevCursor, results.size())
+        if (results.size() < limit || cursor == prevCursor) done = true
       }
     }
     last

@@ -9,6 +9,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StringType
 
+import MergeSink.deleteTree
+
 /** Shared LSM-style maintenance for the streaming index sinks
   * ([[LshDedupSink]], [[AnnIndexSink]]): fold the one-file-per-batch
   * accumulation inside every `<partCol>=` directory back to ONE file per
@@ -203,11 +205,4 @@ object IndexCompact {
           Files.move(f, dst, StandardCopyOption.ATOMIC_MOVE)
       }
   }
-
-  private def deleteTree(d: Path): Unit =
-    if (Files.exists(d))
-      scala.util.Using.resource(Files.walk(d)) { st =>
-        st.sorted(java.util.Comparator.reverseOrder())
-          .iterator().asScala.toList
-      }.foreach(Files.deleteIfExists(_))
 }

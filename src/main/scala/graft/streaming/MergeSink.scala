@@ -1,7 +1,10 @@
 package graft.streaming
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+
+import scala.jdk.CollectionConverters._
+import scala.util.Using
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
@@ -123,7 +126,7 @@ object MergeSink {
       StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
     // retain only the previous version (crash-recovery window)
     cur.foreach { case (prev, _) =>
-      if (prev >= 1) deleteRecursive(Paths.get(root, s"v=${prev - 1}"))
+      if (prev >= 1) deleteTree(Paths.get(root, s"v=${prev - 1}"))
     }
     true
   }
@@ -134,10 +137,10 @@ object MergeSink {
       : (DataFrame, Long) => Unit =
     (df, id) => { applyBatch(root, df, id, excludeTypes, mapDoc = mapDoc); () }
 
-  private def deleteRecursive(p: java.nio.file.Path): Unit =
-    if (Files.exists(p)) {
-      import scala.jdk.CollectionConverters._
-      Files.walk(p).iterator().asScala.toSeq.reverse
-        .foreach(f => Files.deleteIfExists(f))
-    }
+  /** Delete a directory tree, children before parents (no-op when
+    * absent). Shared by every store sink's retention step. */
+  private[streaming] def deleteTree(p: Path): Unit =
+    if (Files.exists(p))
+      Using.resource(Files.walk(p))(_.iterator().asScala.toList).reverse
+        .foreach(Files.deleteIfExists(_))
 }

@@ -131,11 +131,14 @@ class HttpChangesFeedSpec extends SparkSpec {
     (1 to n).foreach(i => c.changes +=
       c.Chg(i, s"d$i", "1-a", doc = s"""{"n":$i}"""))
 
+  /** A tokenless (CouchDB 1.x) cursor. */
+  private def ord(n: Long): SeqTok = SeqTok(n, None)
+
   test("latestSeq reads update_seq from the db info document") {
     withCouch() { (couch, url) =>
       seed(couch, 7)
       val feed = new HttpChangesFeed(url, "testdb")
-      assert(feed.latestSeq() == 7L)
+      assert(feed.latestSeq() == ord(7L))
     }
   }
 
@@ -143,7 +146,7 @@ class HttpChangesFeedSpec extends SparkSpec {
     withCouch() { (couch, url) =>
       seed(couch, 25)
       val feed = new HttpChangesFeed(url, "testdb", pageSize = 10)
-      val got = feed.changes(0, 25).toVector
+      val got = feed.changes(ord(0), ord(25)).toVector
       assert(got.map(_.seq) == (1L to 25L).toVector)
       assert(got.head.doc == """{"n":1}""")
       assert(got.head.rev == "1-a")
@@ -155,7 +158,8 @@ class HttpChangesFeedSpec extends SparkSpec {
     withCouch() { (couch, url) =>
       seed(couch, 20)
       val feed = new HttpChangesFeed(url, "testdb", pageSize = 6)
-      assert(feed.changes(5, 12).map(_.seq).toVector == (6L to 12L).toVector)
+      assert(feed.changes(ord(5), ord(12)).map(_.seq).toVector ==
+        (6L to 12L).toVector)
     }
   }
 
@@ -163,10 +167,10 @@ class HttpChangesFeedSpec extends SparkSpec {
     withCouch() { (couch, url) =>
       seed(couch, 30)
       val feed = new HttpChangesFeed(url, "testdb", pageSize = 8)
-      assert(feed.nthSeqAfter(0, 10, Long.MaxValue) == 10L)
-      assert(feed.nthSeqAfter(25, 100, Long.MaxValue) == 30L) // fewer than n
-      assert(feed.nthSeqAfter(0, 100, 17L) == 17L)            // cap wins
-      assert(feed.nthSeqAfter(30, 5, Long.MaxValue) == 30L)   // nothing new
+      assert(feed.nthSeqAfter(ord(0), 10, Long.MaxValue) == ord(10L))
+      assert(feed.nthSeqAfter(ord(25), 100, Long.MaxValue) == ord(30L)) // fewer than n
+      assert(feed.nthSeqAfter(ord(0), 100, 17L) == ord(17L))            // cap wins
+      assert(feed.nthSeqAfter(ord(30), 5, Long.MaxValue) == ord(30L))   // nothing new
     }
   }
 
@@ -177,11 +181,16 @@ class HttpChangesFeedSpec extends SparkSpec {
       val feed = new HttpChangesFeed(url, "testdb", pageSize = 4)
       // the row with the unorderable seq is dropped (parseNode skip
       // semantics); everything around it pages through
-      val got = feed.changesTok(SeqTok.Zero, SeqTok(10L, None)).toVector
+      val got = feed.changes(SeqTok.Zero, ord(10L)).toVector
       assert(got.map(_.seq) == Vector(1L, 2L, 3L, 4L, 6L, 7L, 8L, 9L, 10L))
       // admission control counts the well-formed rows and never throws
-      val t = feed.nthSeqTokAfter(SeqTok.Zero, 9, Long.MaxValue)
+      val t = feed.nthSeqAfter(SeqTok.Zero, 9, Long.MaxValue)
       assert(t.ord == 10L)
+      // but a page holding ONLY the malformed row is not the end of the
+      // feed: coming back short would let the batch offset advance past
+      // seqs 6-10 unread, so the read fails as the transient class
+      val onePage = new HttpChangesFeed(url, "testdb", pageSize = 1)
+      intercept[java.io.IOException](onePage.changes(4L, 10L).toVector)
     }
   }
 
@@ -269,7 +278,7 @@ class HttpChangesFeedSpec extends SparkSpec {
     withFaultCouch(5) { (stub, url) =>
       stub.rateLimitFirst = 2
       val feed = new HttpChangesFeed(url, "fdb")
-      assert(feed.latestSeq() == 5L) // succeeded despite two 429s
+      assert(feed.latestSeq().ord == 5L) // succeeded despite two 429s
       assert(stub.rateLimitedCount == 2L)
     }
   }
@@ -299,13 +308,13 @@ class HttpChangesFeedSpec extends SparkSpec {
     withFaultCouch(20) { (stub, url) =>
       stub.dropChangesRequest = 2 // cut the SECOND _changes page mid-body
       val feed = new HttpChangesFeed(url, "fdb", pageSize = 5)
-      val it = feed.changes(0, 20)
+      val it = feed.changes(ord(0), ord(20))
       val first = it.take(5).toVector // page 1 intact
       assert(first.map(_.seq) == (1L to 5L).toVector)
       intercept[java.io.IOException](it.hasNext) // page 2 truncated
       // the consumer committed through seq 5; a restarted reader asks
       // for since=5 and the fault (one-shot, like a real blip) is gone
-      val resumed = feed.changes(5, 20).map(_.seq).toVector
+      val resumed = feed.changes(ord(5), ord(20)).map(_.seq).toVector
       assert(resumed == (6L to 20L).toVector)
       assert(stub.changesSinceLog.toArray.toSeq.contains(5L))
     }
@@ -385,9 +394,8 @@ class HttpChangesFeedSpec extends SparkSpec {
     withOpaqueCouch { (couch, url) =>
       seed(couch, 7)
       val feed = new HttpChangesFeed(url, "testdb")
-      val t = feed.latestSeqTok()
+      val t = feed.latestSeq()
       assert(t.ord == 7L && t.token.contains(couch.tokenOf(7)))
-      assert(feed.latestSeq() == 7L) // ordinal view unchanged
     }
   }
 
@@ -396,7 +404,7 @@ class HttpChangesFeedSpec extends SparkSpec {
       seed(couch, 25)
       val feed = new HttpChangesFeed(url, "testdb", pageSize = 10)
       val until = SeqTok(18L, Some(couch.tokenOf(18)))
-      val got = feed.changesTok(SeqTok.Zero, until).toVector
+      val got = feed.changes(SeqTok.Zero, until).toVector
       assert(got.map(_.seq) == (1L to 18L).toVector)
       assert(got.forall(_.doc != null))
       // every non-initial cursor the server saw was a full token
@@ -405,7 +413,7 @@ class HttpChangesFeedSpec extends SparkSpec {
       assert(raws.nonEmpty && raws.forall(_.contains("-g1AA")),
         s"bare ordinal leaked: $raws")
       // resume from a token boundary: strictly after, nothing repeated
-      val rest = feed.changesTok(
+      val rest = feed.changes(
         SeqTok(18L, Some(couch.tokenOf(18))),
         SeqTok(25L, Some(couch.tokenOf(25)))).toVector
       assert(rest.map(_.seq) == (19L to 25L).toVector)
@@ -416,13 +424,13 @@ class HttpChangesFeedSpec extends SparkSpec {
     withOpaqueCouch { (couch, url) =>
       seed(couch, 30)
       val feed = new HttpChangesFeed(url, "testdb", pageSize = 10)
-      val t10 = feed.nthSeqTokAfter(SeqTok.Zero, 10, Long.MaxValue)
+      val t10 = feed.nthSeqAfter(SeqTok.Zero, 10, Long.MaxValue)
       assert(t10.ord == 10L && t10.token.contains(couch.tokenOf(10)))
-      val more = feed.nthSeqTokAfter(t10, 100, Long.MaxValue)
+      val more = feed.nthSeqAfter(t10, 100, Long.MaxValue)
       assert(more.ord == 30L) // fewer than n available
-      val capped = feed.nthSeqTokAfter(SeqTok.Zero, 100, 17L)
+      val capped = feed.nthSeqAfter(SeqTok.Zero, 100, 17L)
       assert(capped.ord == 17L && capped.token.contains(couch.tokenOf(17)))
-      val none = feed.nthSeqTokAfter(more, 5, Long.MaxValue)
+      val none = feed.nthSeqAfter(more, 5, Long.MaxValue)
       assert(none == more) // nothing new: cursor unchanged
     }
   }
@@ -503,7 +511,7 @@ class HttpChangesFeedSpec extends SparkSpec {
     withOpaqueCouch { (couch, url) =>
       seed(couch, 5)
       val feed = new HttpChangesFeed(url, "testdb")
-      val cur = feed.latestSeqTok()
+      val cur = feed.latestSeq()
       assert(cur.ord == 5L)
       val timedOut = feed.longPoll(cur, waitMs = 200L)
       assert(timedOut == cur)
@@ -522,7 +530,7 @@ class HttpChangesFeedSpec extends SparkSpec {
     withOpaqueCouch { (couch, url) =>
       seed(couch, 5)
       val feed = new HttpChangesFeed(url, "testdb", maxRetries = 0)
-      // the legacy numeric path would send since=3 — the 2/3 server 400s
+      // a bare ordinal bound sends since=3 — the 2/3 server 400s
       intercept[java.io.IOException](feed.changes(3, 5).toVector)
     }
   }
@@ -538,27 +546,29 @@ class FileFeedSummarySpec extends SparkSpec {
       s"""{"seq":$s,"id":"d$s","changes":[{"rev":"1-a"}],"doc":{"n":$s}}""")
       .mkString("\n").getBytes("UTF-8"))
 
+  private def ord(n: Long): SeqTok = SeqTok(n, None)
+
   test("nthSeqAfter walks file summaries and scans only the boundary file") {
     val dir = Files.createTempDirectory("ffs")
     writeFeed(dir, "a.jsonl", 1L to 10L)
     writeFeed(dir, "b.jsonl", 11L to 20L)
     writeFeed(dir, "c.jsonl", 21L to 30L)
     val feed = new FileChangesFeed(dir.toString)
-    assert(feed.latestSeq() == 30L)
-    assert(feed.nthSeqAfter(0, 10, Long.MaxValue) == 10L)  // whole file a
-    assert(feed.nthSeqAfter(0, 15, Long.MaxValue) == 15L)  // boundary in b
-    assert(feed.nthSeqAfter(12, 5, Long.MaxValue) == 17L)  // since inside b
-    assert(feed.nthSeqAfter(0, 100, 23L) == 23L)           // cap inside c
-    assert(feed.nthSeqAfter(30, 5, Long.MaxValue) == 30L)  // nothing new
-    assert(feed.nthSeqAfter(5, 0, Long.MaxValue) == 5L)    // n=0 no-op
+    assert(feed.latestSeq() == ord(30L))
+    assert(feed.nthSeqAfter(ord(0), 10, Long.MaxValue) == ord(10L))  // whole file a
+    assert(feed.nthSeqAfter(ord(0), 15, Long.MaxValue) == ord(15L))  // boundary in b
+    assert(feed.nthSeqAfter(ord(12), 5, Long.MaxValue) == ord(17L))  // since inside b
+    assert(feed.nthSeqAfter(ord(0), 100, 23L) == ord(23L))           // cap inside c
+    assert(feed.nthSeqAfter(ord(30), 5, Long.MaxValue) == ord(30L))  // nothing new
+    assert(feed.nthSeqAfter(ord(5), 0, Long.MaxValue) == ord(5L))    // n=0 no-op
   }
 
   test("unsorted seqs within a file still answer exactly") {
     val dir = Files.createTempDirectory("ffs2")
     writeFeed(dir, "a.jsonl", Seq(3L, 1L, 5L, 2L, 4L))
     val feed = new FileChangesFeed(dir.toString)
-    assert(feed.latestSeq() == 5L)
-    assert(feed.nthSeqAfter(0, 3, Long.MaxValue) == 3L)
-    assert(feed.nthSeqAfter(2, 2, Long.MaxValue) == 4L)
+    assert(feed.latestSeq() == ord(5L))
+    assert(feed.nthSeqAfter(ord(0), 3, Long.MaxValue) == ord(3L))
+    assert(feed.nthSeqAfter(ord(2), 2, Long.MaxValue) == ord(4L))
   }
 }
